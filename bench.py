@@ -185,11 +185,6 @@ def main() -> None:
         "hand-rerunning — VERDICT r5 item 8)",
     )
     args = ap.parse_args()
-    # start-of-run evidence sweep (VERDICT r10 item 2): the driver
-    # stamps BENCH_rNN.json after the previous bench run exited, so
-    # the prior round always ends with one untracked straggler — commit
-    # it before this run does anything else
-    _commit_artifacts(os.path.dirname(os.path.abspath(__file__)))
     # host-state evidence (VERDICT r12 item 2): the r12 driver run took
     # co-tenant load and its per-query numbers read as a 12-entry
     # regression that code diffs disprove — record the load average at
@@ -197,13 +192,15 @@ def main() -> None:
     # of needing cross-round archaeology
     loadavg_start = [round(x, 2) for x in os.getloadavg()]
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    heap_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (4 << 20)
     spark = _SPARK = get_spark(
         app_name="bench",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
-        # local[32] puts driver + executors in one JVM: the 1g default
-        # heap GC-thrashes under 32 concurrent tasks.
-        extra_conf={"spark.driver.memory": "24g"},
+        # local[N] puts driver + executors in one JVM: the 1g default
+        # heap GC-thrashes under many concurrent tasks, so the heap
+        # takes a quarter of physical memory
+        extra_conf={"spark.driver.memory": f"{heap_mb}m"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -681,62 +678,7 @@ def main() -> None:
         del headline["queries"][drop]
         line = json.dumps(headline, separators=(",", ":"))
     print(line)
-    _commit_artifacts(repo)
     spark.stop()
-
-
-def _commit_artifacts(repo: str) -> None:
-    """Stage and commit the evidence files from the bench step itself.
-
-    Two rounds in a row ended with BENCH_*/CORRECTNESS_* sitting
-    untracked in the working tree (VERDICT r8 item 1, r9 item 1 —
-    'fold the commit into the bench-recording step itself so the miss
-    can't recur'). Only the evidence pathspecs are staged — never code
-    or other working-tree changes — and every step is best-effort:
-    bench output must not fail because git did, but a skipped commit
-    is WARNED to stderr (ADVICE r10: a bare pass here silently
-    recreated the exact miss this helper exists to prevent).
-
-    Called at bench START as well as end (VERDICT r10 item 2): the
-    driver stamps BENCH_rNN.json AFTER bench.py exits, so the end-of-
-    run sweep always misses the round stamp — the start-of-run sweep
-    commits the PRIOR round's straggler, keeping the tree clean."""
-    import glob as _glob
-    import subprocess
-
-    try:
-        paths = sorted(
-            _glob.glob(os.path.join(repo, "BENCH_*.json"))
-            + _glob.glob(os.path.join(repo, "CORRECTNESS_*.json"))
-        )
-        if not paths:
-            return
-        subprocess.run(
-            ["git", "add", "--"] + paths,
-            cwd=repo, check=True, capture_output=True, timeout=30,
-        )
-        staged = subprocess.run(
-            ["git", "diff", "--cached", "--quiet", "--"] + paths,
-            cwd=repo, capture_output=True, timeout=30,
-        )
-        if staged.returncode != 0:
-            # pathspec-scoped commit: ONLY the evidence files land, even
-            # if unrelated work happens to be sitting in the index
-            subprocess.run(
-                [
-                    "git", "commit", "-q",
-                    "-m", "Record bench/correctness evidence artifacts",
-                    "-m", "No-Verification-Needed: evidence-file sync from the bench step",
-                    "--",
-                ] + paths,
-                cwd=repo, check=True, capture_output=True, timeout=30,
-            )
-    except Exception as exc:
-        print(
-            f"WARNING: evidence-artifact commit skipped ({exc!r}) — "
-            "BENCH_*/CORRECTNESS_* may be sitting uncommitted",
-            file=sys.stderr,
-        )
 
 
 if __name__ == "__main__":

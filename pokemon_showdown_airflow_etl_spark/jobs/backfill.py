@@ -42,10 +42,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import metadata as M
-from ..schemas import PAGE_SIZE, REPLAY_STATUS
+from ..schemas import REPLAY_STATUS
 from ..sources.api import PageFetchError, ReplayApiClient
 from .lake import MetadataStore, ReplayLake, save_state
-from .pipeline import _batch_id
+from .pipeline import _batch_id, _walk_pages
 
 RANGE_SCHEMA = "range_start long, range_end long"
 # one stream carries both data rows (row_json set) and exactly one
@@ -59,27 +59,21 @@ _ROW_STRUCT = "id string, uploadtime long, p1 string, p2 string, players array<s
 def _fetch_range(
     client: ReplayApiClient, format_id: str, start: int, end: int, max_pages: int
 ) -> tuple[list[dict], bool, str | None]:
-    """The sequential page loop, bounded to [start, end). Returns the
-    rows plus whether the range was drained to its floor (a transport
-    error or an exhausted page budget both leave it incomplete)."""
+    """The sequential page walk (pipeline._walk_pages), bounded to
+    [start, end). Returns the rows plus whether the range was drained
+    to its floor (a transport error or an exhausted page budget both
+    leave it incomplete)."""
     out: list[dict] = []
-    before = end
-    pages = 0
-    while pages < max_pages:
-        try:
-            page = client.fetch_page(format_id, before, strict=True)
-        except PageFetchError as exc:
-            return out, False, str(exc)
-        pages += 1
-        if not page:
-            return out, True, None
-        for row in page:
-            if int(row["uploadtime"]) < start:
+    try:
+        for rows, full in _walk_pages(client, format_id, end, max_pages, strict=True):
+            for row in rows:
+                if int(row["uploadtime"]) < start:
+                    return out, True, None
+                out.append(row)
+            if not full:
                 return out, True, None
-            out.append(row)
-        if len(page) < PAGE_SIZE:
-            return out, True, None
-        before = int(page[-1]["uploadtime"])
+    except PageFetchError as exc:
+        return out, False, str(exc)
     return out, False, f"page budget exhausted ({max_pages})"
 
 

@@ -37,6 +37,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sketches import merge_bloom_rows, merge_cms_rows, merge_hist_rows
+from ..operators.text import merge_lm_rows
 from ._lake import ensure_lake, formula_tag, keyed_dir
 
 VERSION = 1
@@ -159,16 +161,26 @@ def signature_tables(
 #                            filter over the considered docs' word
 #                            4-grams (t9's collision key) as (w, bits)
 #                            rows, <= BLOOM_WORDS rows/batch, merged by
-#                            bitwise OR (idempotent — crash-window
-#                            double reads heal like the HLL max law) —
-#                            "does the corpus possibly contain this
-#                            gram" answered from stored rows, the probe
-#                            an eval-benchmark intake runs without
-#                            re-scanning 100 TB of text
+#                            bitwise OR — "does the corpus possibly
+#                            contain this gram" answered from stored
+#                            rows, the probe an eval-benchmark intake
+#                            runs without re-scanning 100 TB of text
+#   hllg/batch=<id>/         per-segment HLL registers (segments by
+#                            HLLG_GROUP_COL), merged by max per
+#                            (group, register) — segment overlaps
+#   hist/batch=<id>/         additive token-length histogram buckets,
+#                            merged by SUM — corpus token quantiles
 #   estats/batch=<id>/       (embedding lake roots only) per-dimension
 #                            additive drift statistics — see
 #                            jobs/embedding_index_lake.py; the same
 #                            compaction reduction + sweep covers it
+#
+# The FACETS registry below is the one place a facet is declared: its
+# table name and merge law. Compaction reduces every registered table,
+# the retired-batch sweep removes them, sketch-stats reports their
+# coverage, and every facet read goes through _read_facet. Adding a
+# facet means one registry entry plus its writer in
+# ingest_signature_batch.
 #
 # Idempotency + crash-safety (the K3/T5 contract, file-level here; a
 # table format with transactions takes over at deploy time): members/
@@ -295,20 +307,11 @@ def merge_hllg_rows(rows: DataFrame) -> DataFrame:
 def read_corpus_grouped_hll(
     spark: SparkSession, sig_root: str
 ) -> DataFrame | None:
-    """The corpus-wide merged grouped-HLL registers over every
-    committed batch's stored hllg/ partition, or None when no batch
-    carries the facet (batches whose docs lacked the group column, or
-    that predate it, simply have no partition and drop out)."""
-    import os
-
-    committed = _committed_batches(os.path.join(sig_root, "members"))
-    paths = [
-        os.path.join(sig_root, HLLG_TABLE, f"batch={b}") for b in committed
-    ]
-    paths = [p for p in paths if os.path.exists(os.path.join(p, "_SUCCESS"))]
-    if not paths:
-        return None
-    return merge_hllg_rows(spark.read.parquet(*paths))
+    """The corpus-wide merged grouped-HLL registers over every live
+    batch's stored hllg/ partition, or None when no batch carries the
+    facet (batches whose docs lacked the group column, or that predate
+    it, simply have no partition and drop out)."""
+    return _read_facet(spark, sig_root, HLLG_TABLE)
 
 
 def corpus_segment_overlap(
@@ -332,11 +335,10 @@ def _crash_window_replaced(
 ) -> set[str]:
     """Batch ids still committed but already replaced by a COMMITTED
     consolidated batch — the compaction crash window between the
-    consolidated partition's members marker and the removals. Readers
-    of ADDITIVE facets (LM bigram counts, CMS cells) must exclude them
-    or every replaced batch's counts enter the merge twice; the
-    max/bottom-k sketch facet instead heals by idempotence + KMV row
-    dedup (merge_sketch_rows)."""
+    consolidated partition's members marker and the removals. Facet
+    reads exclude them: an additive facet (LM bigram counts, CMS
+    cells, histogram buckets, drift statistics) would count every
+    replaced batch twice."""
     import json
     import os
 
@@ -352,24 +354,55 @@ def _crash_window_replaced(
     return out
 
 
-def _committed_facet_paths(
-    sig_root: str, facet_table: str, data_table: str = "signatures"
+def _live_batches(
+    sig_root: str, data_table: str = "signatures", exclude: tuple[str, ...] = ()
 ) -> list[str]:
-    """The committed, non-crash-window facet partitions of
-    ``facet_table`` that actually carry a _SUCCESS marker (batches
-    predating the facet have no partition and drop out)."""
+    """Committed batch ids minus those replaced in a compaction crash
+    window and those named in ``exclude``."""
     import os
 
     committed = _committed_batches(os.path.join(sig_root, "members"))
     skip = _crash_window_replaced(sig_root, committed, data_table)
-    paths = []
-    for b in committed:
-        if b in skip:
-            continue
-        p = os.path.join(sig_root, facet_table, f"batch={b}")
-        if os.path.exists(os.path.join(p, "_SUCCESS")):
-            paths.append(p)
-    return paths
+    return [b for b in committed if b not in skip and b not in exclude]
+
+
+def _committed_facet_paths(
+    sig_root: str,
+    facet_table: str,
+    data_table: str = "signatures",
+    exclude: tuple[str, ...] = (),
+) -> list[str]:
+    """The live batches' ``facet_table`` partitions that carry a
+    _SUCCESS marker (batches predating the facet, or ingested with
+    facets off, have no partition and drop out)."""
+    import os
+
+    paths = (
+        os.path.join(sig_root, facet_table, f"batch={b}")
+        for b in _live_batches(sig_root, data_table, exclude)
+    )
+    return [p for p in paths if os.path.exists(os.path.join(p, "_SUCCESS"))]
+
+
+def _read_facet(
+    spark: SparkSession,
+    sig_root: str,
+    facet_table: str,
+    data_table: str = "signatures",
+    exclude: tuple[str, ...] = (),
+    **merge_kw,
+) -> DataFrame | None:
+    """Every facet read: ``facet_table``'s live partitions merged by
+    its FACETS law (``merge_kw`` forwards to it), or None when no live
+    batch carries the facet. Idempotent merges (sketch, hh, bloom,
+    hllg) would survive a crash-window double read, additive ones
+    would not; all read the same partitions, which gives the same rows
+    either way — a consolidated partition already holds the merge of
+    the batches it replaced."""
+    paths = _committed_facet_paths(sig_root, facet_table, data_table, exclude)
+    if not paths:
+        return None
+    return FACETS[facet_table](spark.read.parquet(*paths), **merge_kw)
 
 
 def facet_coverage(
@@ -382,19 +415,10 @@ def facet_coverage(
     promise corpus-wide numbers (curate --lm-root, sketch-stats) check
     this and surface partial coverage instead of implying the whole
     corpus was summarized."""
-    import os
-
-    committed = _committed_batches(os.path.join(sig_root, "members"))
-    skip = _crash_window_replaced(sig_root, committed, data_table)
-    live = [b for b in committed if b not in skip]
-    n_facet = sum(
-        1
-        for b in live
-        if os.path.exists(
-            os.path.join(sig_root, facet_table, f"batch={b}", "_SUCCESS")
-        )
+    return (
+        len(_committed_facet_paths(sig_root, facet_table, data_table)),
+        len(_live_batches(sig_root, data_table)),
     )
-    return (n_facet, len(live))
 
 
 def batch_sketch_rows(
@@ -494,22 +518,12 @@ def merge_sketch_rows(rows: DataFrame, k: int = SKETCH_KMV_K) -> DataFrame:
 def read_corpus_sketch(
     spark: SparkSession, sig_root: str, k: int = SKETCH_KMV_K
 ) -> DataFrame | None:
-    """The corpus-wide merged sketch over every COMMITTED batch's
-    stored sketch partition, or None when nothing is committed.
-    Batches ingested before the sketch facet existed simply have no
-    sketches/ partition and drop out of the merge (the facet then
-    summarizes the batches that carry it)."""
-    import os
-
-    committed = _committed_batches(os.path.join(sig_root, "members"))
-    paths = []
-    for b in committed:
-        p = os.path.join(sig_root, SKETCH_TABLE, f"batch={b}")
-        if os.path.exists(os.path.join(p, "_SUCCESS")):
-            paths.append(p)
-    if not paths:
-        return None
-    return merge_sketch_rows(spark.read.parquet(*paths), k=k)
+    """The corpus-wide merged sketch over every live batch's stored
+    sketch partition, or None when no batch carries it. Batches
+    ingested before the sketch facet existed simply have no sketches/
+    partition and drop out of the merge (the facet then summarizes
+    the batches that carry it)."""
+    return _read_facet(spark, sig_root, SKETCH_TABLE, k=k)
 
 
 def _batch_grams(
@@ -599,35 +613,35 @@ def merge_hh_rows(rows: DataFrame) -> DataFrame:
     return rows.groupBy("gram").agg(F.max("n").cast("long").alias("n"))
 
 
-def read_corpus_lm(spark: SparkSession, sig_root: str) -> DataFrame | None:
-    """The corpus-wide MERGED bigram LM over every committed batch's
-    stored lm/ partition (kind, w1, w2, n rows), or None when no batch
-    carries the facet. Additive counts cannot heal crash-window
-    duplication by idempotence, so batches already replaced by a
-    committed consolidated partition are excluded explicitly
-    (_committed_facet_paths). On a corpus mixing pre-facet and faceted
-    batches the model covers the faceted subset only — check
-    ``facet_coverage`` before treating it as corpus-wide."""
-    from ..operators.text import merge_lm_rows
+# every intake facet's table -> the merge law its per-batch rows reduce
+# by (the layout comment of the incremental section lists its users)
+FACETS = {
+    SKETCH_TABLE: merge_sketch_rows,
+    LM_TABLE: merge_lm_rows,
+    CMS_TABLE: merge_cms_rows,
+    HH_TABLE: merge_hh_rows,
+    BLOOM_TABLE: merge_bloom_rows,
+    HLLG_TABLE: merge_hllg_rows,
+    HIST_TABLE: merge_hist_rows,
+    ESTATS_TABLE: merge_estats_rows,
+}
 
-    paths = _committed_facet_paths(sig_root, LM_TABLE)
-    if not paths:
-        return None
-    return merge_lm_rows(spark.read.parquet(*paths))
+
+def read_corpus_lm(spark: SparkSession, sig_root: str) -> DataFrame | None:
+    """The corpus-wide MERGED bigram LM over every live batch's stored
+    lm/ partition (kind, w1, w2, n rows), or None when no batch carries
+    the facet. On a corpus mixing pre-facet and faceted batches the
+    model covers the faceted subset only — check ``facet_coverage``
+    before treating it as corpus-wide."""
+    return _read_facet(spark, sig_root, LM_TABLE)
 
 
 def read_corpus_cms(spark: SparkSession, sig_root: str) -> DataFrame | None:
-    """The corpus-wide MERGED count-min sketch over every committed
-    batch's stored cms/ partition ((cell, cnt) rows, <= depth * width),
-    or None when no batch carries the facet. Same crash-window
-    exclusion and partial-coverage caveat as the LM facet — cells are
-    additive, and only faceted batches contribute."""
-    from ..operators.sketches import merge_cms_rows
-
-    paths = _committed_facet_paths(sig_root, CMS_TABLE)
-    if not paths:
-        return None
-    return merge_cms_rows(spark.read.parquet(*paths))
+    """The corpus-wide MERGED count-min sketch over every live batch's
+    stored cms/ partition ((cell, cnt) rows, <= depth * width), or None
+    when no batch carries the facet. Same partial-coverage caveat as
+    the LM facet: only faceted batches contribute."""
+    return _read_facet(spark, sig_root, CMS_TABLE)
 
 
 def batch_gram4_stream(
@@ -672,29 +686,13 @@ def batch_bloom_rows(
 def read_corpus_bloom(
     spark: SparkSession, sig_root: str, exclude: tuple = ()
 ) -> DataFrame | None:
-    """The corpus-wide MERGED Bloom filter over every committed batch's
+    """The corpus-wide MERGED Bloom filter over every live batch's
     stored bloom/ partition, or None when no batch carries the facet.
-    OR is idempotent, so like the sketch facet (and unlike the additive
-    lm/cms legs) this read uses the plain committed-batch paths — a
-    compaction crash window's double read merges to the same words.
     ``exclude`` drops named batch ids from the merge — a decon check
     that runs AFTER its own drop was admitted passes the drop's
     batch_id here so the probe sees only PRIOR batches (ADVICE r11:
     otherwise every drop doc trivially flags against itself)."""
-    import os
-
-    from ..operators.sketches import merge_bloom_rows
-
-    committed = _committed_batches(os.path.join(sig_root, "members"))
-    paths = [
-        os.path.join(sig_root, BLOOM_TABLE, f"batch={b}")
-        for b in committed
-        if b not in exclude
-    ]
-    paths = [p for p in paths if os.path.exists(os.path.join(p, "_SUCCESS"))]
-    if not paths:
-        return None
-    return merge_bloom_rows(spark.read.parquet(*paths))
+    return _read_facet(spark, sig_root, BLOOM_TABLE, exclude=exclude)
 
 
 def corpus_gram_probe(
@@ -819,18 +817,11 @@ def batch_hist_rows(
 
 
 def read_corpus_hist(spark: SparkSession, sig_root: str) -> DataFrame | None:
-    """The corpus-wide merged token-length histogram over every
-    committed batch's stored hist/ partition, or None when no batch
-    carries the facet. Additive counts cannot heal crash-window
-    double-merges, so replaced-but-unremoved partitions are excluded
-    (_committed_facet_paths) — the lm/cms rule. Partial coverage
-    caveat applies: only faceted batches contribute."""
-    paths = _committed_facet_paths(sig_root, HIST_TABLE)
-    if not paths:
-        return None
-    from ..operators.sketches import merge_hist_rows
-
-    return merge_hist_rows(spark.read.parquet(*paths))
+    """The corpus-wide merged token-length histogram over every live
+    batch's stored hist/ partition, or None when no batch carries the
+    facet. Partial coverage caveat applies: only faceted batches
+    contribute."""
+    return _read_facet(spark, sig_root, HIST_TABLE)
 
 
 def corpus_token_quantiles(
@@ -856,12 +847,9 @@ def corpus_token_quantiles(
 
 def read_corpus_hh(spark: SparkSession, sig_root: str) -> DataFrame | None:
     """The corpus-wide merged heavy-hitter candidate set over every
-    committed batch's stored hh/ partition, or None when no batch
-    carries the facet."""
-    paths = _committed_facet_paths(sig_root, HH_TABLE)
-    if not paths:
-        return None
-    return merge_hh_rows(spark.read.parquet(*paths))
+    live batch's stored hh/ partition, or None when no batch carries
+    the facet."""
+    return _read_facet(spark, sig_root, HH_TABLE)
 
 
 def lake_heavy_hitters(
@@ -1184,7 +1172,6 @@ def compact_signature_corpus(
     import hashlib
     import json
     import os
-    import shutil
 
     sig_dir = os.path.join(sig_root, data_table)
     mem_dir = os.path.join(sig_root, "members")
@@ -1258,125 +1245,21 @@ def compact_signature_corpus(
         sigs.repartition(n_files).write.mode("overwrite").parquet(
             os.path.join(sig_dir, f"batch={cid}")
         )
-        # the sketch facet consolidates by REDUCTION, not concatenation:
-        # the old partitions' rows merge to one sketch (max/bottom-k —
-        # merged == from-scratch by the property-tested laws), so the
-        # stored facet stays a few hundred rows however many batches
-        # fold in. Batches predating the facet have no sketch dir and
-        # contribute nothing; written before the members marker like
-        # every other part of the consolidated batch.
-        sk_paths = [
-            os.path.join(sig_root, SKETCH_TABLE, f"batch={b}")
-            for b in old
-        ]
-        sk_paths = [
-            p for p in sk_paths if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
-        if sk_paths:
-            merge_sketch_rows(spark.read.parquet(*sk_paths)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                os.path.join(sig_root, SKETCH_TABLE, f"batch={cid}")
-            )
-        # the additive facets consolidate by the same reduction shape:
-        # lm rows merge by SUM/DISTINCT, cms cells by SUM — each stays
-        # O(types)/O(depth*width) however many batches fold in
-        lm_paths = [
-            os.path.join(sig_root, LM_TABLE, f"batch={b}") for b in old
-        ]
-        lm_paths = [
-            p for p in lm_paths if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
-        if lm_paths:
-            from ..operators.text import merge_lm_rows
-
-            merge_lm_rows(spark.read.parquet(*lm_paths)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                os.path.join(sig_root, LM_TABLE, f"batch={cid}")
-            )
-        cms_paths = [
-            os.path.join(sig_root, CMS_TABLE, f"batch={b}") for b in old
-        ]
-        cms_paths = [
-            p for p in cms_paths if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
-        if cms_paths:
-            from ..operators.sketches import merge_cms_rows
-
-            merge_cms_rows(spark.read.parquet(*cms_paths)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                os.path.join(sig_root, CMS_TABLE, f"batch={cid}")
-            )
-        hist_paths = [
-            os.path.join(sig_root, HIST_TABLE, f"batch={b}") for b in old
-        ]
-        hist_paths = [
-            p for p in hist_paths if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
-        if hist_paths:
-            from ..operators.sketches import merge_hist_rows
-
-            merge_hist_rows(spark.read.parquet(*hist_paths)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                os.path.join(sig_root, HIST_TABLE, f"batch={cid}")
-            )
-        hh_paths = [
-            os.path.join(sig_root, HH_TABLE, f"batch={b}") for b in old
-        ]
-        hh_paths = [
-            p for p in hh_paths if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
-        if hh_paths:
-            merge_hh_rows(spark.read.parquet(*hh_paths)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                os.path.join(sig_root, HH_TABLE, f"batch={cid}")
-            )
-        # bloom reduces by bitwise OR — idempotent like the sketch/hh
-        # merges, so the crash window cannot corrupt it either
-        bl_paths = [
-            os.path.join(sig_root, BLOOM_TABLE, f"batch={b}") for b in old
-        ]
-        bl_paths = [
-            p for p in bl_paths if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
-        if bl_paths:
-            from ..operators.sketches import merge_bloom_rows
-
-            merge_bloom_rows(spark.read.parquet(*bl_paths)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                os.path.join(sig_root, BLOOM_TABLE, f"batch={cid}")
-            )
-        # hllg reduces by max per (group, register) — idempotent, so
-        # the crash window cannot corrupt it either
-        hg_paths = [
-            os.path.join(sig_root, HLLG_TABLE, f"batch={b}") for b in old
-        ]
-        hg_paths = [
-            p for p in hg_paths if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
-        if hg_paths:
-            merge_hllg_rows(spark.read.parquet(*hg_paths)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                os.path.join(sig_root, HLLG_TABLE, f"batch={cid}")
-            )
-        es_paths = [
-            os.path.join(sig_root, ESTATS_TABLE, f"batch={b}") for b in old
-        ]
-        es_paths = [
-            p for p in es_paths if os.path.exists(os.path.join(p, "_SUCCESS"))
-        ]
-        if es_paths:
-            merge_estats_rows(spark.read.parquet(*es_paths)).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                os.path.join(sig_root, ESTATS_TABLE, f"batch={cid}")
-            )
+        # the facets consolidate by REDUCTION, not concatenation: each
+        # table's old partitions merge by its FACETS law (merged ==
+        # from-scratch by the property-tested laws), so a stored facet
+        # stays bounded however many batches fold in. Batches predating
+        # a facet have no partition and contribute nothing; written
+        # before the members marker like every other part of the
+        # consolidated batch. No crash window is open on this branch
+        # (the resume branch above closes one), so the live batches
+        # _read_facet merges are exactly ``old``.
+        for table in FACETS:
+            merged = _read_facet(spark, sig_root, table, data_table)
+            if merged is not None:
+                merged.coalesce(1).write.mode("overwrite").parquet(
+                    os.path.join(sig_root, table, f"batch={cid}")
+                )
         with open(_manifest_path(cid), "w") as f:
             json.dump(sorted(old), f)
         # members commit marker LAST — until it lands, the consolidated
@@ -1394,15 +1277,6 @@ def compact_signature_corpus(
     # the ledger, removing a batch's members would silently re-arm its
     # id and let a re-ingest overwrite the admissions audit history.
     _retire(sig_root, old)
-    for b in old:
-        shutil.rmtree(os.path.join(mem_dir, f"batch={b}"), ignore_errors=True)
-        shutil.rmtree(os.path.join(sig_dir, f"batch={b}"), ignore_errors=True)
-        for facet in (SKETCH_TABLE, LM_TABLE, CMS_TABLE, HH_TABLE,
-                      BLOOM_TABLE, HLLG_TABLE, ESTATS_TABLE, HIST_TABLE):
-            shutil.rmtree(
-                os.path.join(sig_root, facet, f"batch={b}"),
-                ignore_errors=True,
-            )
     _sweep_retired(sig_root, data_table)
     return {
         "n_batches_consolidated": len(old),
@@ -1533,9 +1407,7 @@ def corpus_sketch_stats(
         }
 
     coverage = {
-        t: list(facet_coverage(sig_root, t))
-        for t in (SKETCH_TABLE, LM_TABLE, CMS_TABLE, HH_TABLE, BLOOM_TABLE,
-                  HLLG_TABLE, HIST_TABLE)
+        t: list(facet_coverage(sig_root, t)) for t in FACETS if t != ESTATS_TABLE
     }
     sk = read_corpus_sketch(spark, sig_root)
     if sk is None:
@@ -1701,25 +1573,17 @@ def _retire(sig_root: str, ids: list[str]) -> None:
 
 
 def _sweep_retired(sig_root: str, data_table: str = "signatures") -> None:
-    """Finish any interrupted removals: a retired id must hold no
-    members/ or data partition (a crash between the two rmtrees
-    would otherwise orphan the data dir forever — the id is gone
-    from the committed set, so the manifest-driven resume can't see
-    it)."""
+    """Remove every retired id's partitions: members/ first (uncommit),
+    then the data table, then every registered facet. Compaction's own
+    removals run here, and so does the finish of any interrupted one (a
+    crash between two removals would otherwise orphan the rest forever
+    — the id is gone from the committed set, so the manifest-driven
+    resume can't see it)."""
     import os
     import shutil
 
     for b in retired_batches(sig_root):
-        shutil.rmtree(
-            os.path.join(sig_root, "members", f"batch={b}"), ignore_errors=True
-        )
-        shutil.rmtree(
-            os.path.join(sig_root, data_table, f"batch={b}"),
-            ignore_errors=True,
-        )
-        for facet in (SKETCH_TABLE, LM_TABLE, CMS_TABLE, HH_TABLE,
-                      BLOOM_TABLE, HLLG_TABLE, ESTATS_TABLE, HIST_TABLE):
+        for table in ("members", data_table, *FACETS):
             shutil.rmtree(
-                os.path.join(sig_root, facet, f"batch={b}"),
-                ignore_errors=True,
+                os.path.join(sig_root, table, f"batch={b}"), ignore_errors=True
             )

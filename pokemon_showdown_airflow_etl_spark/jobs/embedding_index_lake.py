@@ -544,25 +544,15 @@ def batch_embedding_stats_rows(
 
 
 def read_index_estats(spark: SparkSession, index_root: str) -> DataFrame | None:
-    """The corpus-wide merged drift statistics over every committed
-    batch's stored estats/ partition, or None when no batch carries
-    the facet. Additive — same committed-path crash-window exclusion
-    as the lm/cms facets (manifests live in assignments/ here); on a
-    corpus mixing pre-facet and faceted batches the statistics cover
-    the faceted subset only (doc_signature_lake.facet_coverage with
+    """The corpus-wide merged drift statistics over every live batch's
+    stored estats/ partition, or None when no batch carries the facet
+    (manifests live in assignments/ here). On a corpus mixing
+    pre-facet and faceted batches the statistics cover the faceted
+    subset only (doc_signature_lake.facet_coverage with
     data_table='assignments' reports the split)."""
-    from .doc_signature_lake import (
-        ESTATS_TABLE,
-        _committed_facet_paths,
-        merge_estats_rows,
-    )
+    from .doc_signature_lake import ESTATS_TABLE, _read_facet
 
-    paths = _committed_facet_paths(
-        index_root, ESTATS_TABLE, data_table="assignments"
-    )
-    if not paths:
-        return None
-    return merge_estats_rows(spark.read.parquet(*paths))
+    return _read_facet(spark, index_root, ESTATS_TABLE, data_table="assignments")
 
 
 def read_train_stats(spark: SparkSession, index_root: str) -> DataFrame | None:

@@ -25,10 +25,11 @@ which is the only contract that survives 100 TB.
 from __future__ import annotations
 
 import datetime
+import itertools
 import json
-from typing import Iterator
+from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import scalars as C
@@ -82,6 +83,37 @@ def _status_rows(
 # --- stage 1: discovery (T1 incremental / T2 backfill) ----------------------
 
 
+def _walk_pages(
+    client: ReplayApiClient,
+    format_id: str,
+    before_ts: int | None,
+    max_pages: int,
+    strict: bool = False,
+) -> Iterator[tuple[list[dict], bool]]:
+    """The search-page cursor walk every discovery loop shares: yields
+    (rows not yielded before, page was full) per fetched page, newest
+    first, and ends after a short page or ``max_pages`` fetches.
+
+    The API's ``before`` is strict, so paging with ``before=<last
+    row's uploadtime>`` never returns the replays tied with that row
+    beyond the page end. The walk advances with ``before = last + 1``
+    instead and drops the ids it already yielded; a full page that
+    brings nothing new (a whole page sharing one second) falls back to
+    the strict cursor so the walk cannot loop. Callers add their own
+    stop rule by breaking out."""
+    seen: set[str] = set()
+    for _ in range(max_pages):
+        page = client.fetch_page(format_id, before_ts, strict=strict)
+        fresh = [r for r in page if r["id"] not in seen]
+        seen.update(r["id"] for r in fresh)
+        full = len(page) >= PAGE_SIZE
+        yield fresh, full
+        if not full:
+            return
+        last = int(page[-1]["uploadtime"])
+        before_ts = last + 1 if fresh else last
+
+
 def discover(
     spark: SparkSession,
     lake: ReplayLake,
@@ -93,7 +125,7 @@ def discover(
     """Incremental discovery (tasks/discovery.py:23-136).
 
     Watermark = MAX(uploadtime) in metadata (db.py:577-601). Pages walk
-    backwards via the ``before`` cursor; the FIRST row at-or-below the
+    backwards via the tie-safe ``before`` cursor (_walk_pages); the FIRST row at-or-below the
     watermark both drops that row and terminates paging
     (discovery.py:91-100) — rows arrive in descending uploadtime, so one
     stale row means everything after it is stale too. A short page
@@ -104,22 +136,15 @@ def discover(
     batch = _batch_id(format_id)
 
     collected: list[dict] = []
-    before_ts: int | None = None
     pages = 0
-    done = False
-    while pages < max_pages and not done:
-        page = client.fetch_page(format_id, before_ts)
+    for rows, _full in _walk_pages(client, format_id, None, max_pages):
         pages += 1
-        if not page:
-            break
-        for row in page:
-            if watermark is not None and int(row["uploadtime"]) <= watermark:
-                done = True  # first stale row terminates paging
-                break
-            collected.append(row)
-        if len(page) < PAGE_SIZE:
-            done = True
-        before_ts = int(page[-1]["uploadtime"])
+        newer = list(itertools.takewhile(
+            lambda r: watermark is None or int(r["uploadtime"]) > watermark, rows
+        ))
+        collected.extend(newer)
+        if len(newer) < len(rows):
+            break  # first stale row terminates paging
 
     incoming = _status_rows(spark, collected, format_id, batch)
     new_count = meta.insert_new(incoming)
@@ -153,17 +178,10 @@ def discover_backfill(
     batch = _batch_id(format_id, prefix="backfill_")
 
     collected: list[dict] = []
-    before_ts = oldest
     pages = 0
-    while pages < max_pages:
-        page = client.fetch_page(format_id, before_ts)
+    for rows, _full in _walk_pages(client, format_id, oldest, max_pages):
         pages += 1
-        if not page:
-            break
-        collected.extend(page)
-        before_ts = int(page[-1]["uploadtime"])
-        if len(page) < PAGE_SIZE:
-            break
+        collected.extend(rows)
 
     incoming = _status_rows(spark, collected, format_id, batch)
     new_count = meta.insert_new(incoming)
@@ -219,21 +237,27 @@ def _docs_from_fetch(fetched: DataFrame) -> DataFrame:
     )
 
 
-def download(
+def _fetch_and_land(
     spark: SparkSession,
     lake: ReplayLake,
     client: ReplayApiClient,
     format_id: str,
-    parallelism: int = 8,
+    parallelism: int,
+    work_of: Callable[[DataFrame, str], DataFrame],
+    prefix: str,
+    ok_key: str,
+    patch_of: Callable[[str], list[Column]],
 ) -> dict:
-    """Download stage (tasks/download.py:105-266): fetch every
-    undownloaded replay, land documents in the partitioned replay lake,
-    MERGE per-replay success/failure into metadata."""
+    """The shared body of download and retry: fetch the replays the
+    ``work_of`` predicate selects from metadata, land the documents in
+    the partitioned replay lake, MERGE ``patch_of(batch)`` (columns over
+    the fetch result) into metadata, and count — ``ok_key`` names the
+    success count in the returned stats."""
     meta = MetadataStore(spark, lake.metadata_path)
-    work = M.undownloaded(meta.read(), format_id)  # F2, partition-pruned
+    work = work_of(meta.read(), format_id)
     if work.isEmpty():
-        return {"total": 0, "downloaded": 0, "failed": 0, "skipped": True}
-    batch = _batch_id(format_id)
+        return {"total": 0, ok_key: 0, "failed": 0, "skipped": True}
+    batch = _batch_id(format_id, prefix)
 
     fetched = _distributed_fetch(work, client, parallelism)
     docs = _docs_from_fetch(fetched)
@@ -246,19 +270,7 @@ def download(
     docs.hint("rebalance", "format", "date").write.partitionBy(
         "format", "date"
     ).mode("append").parquet(lake.replays_path)
-
-    # db.py:736-830: success -> is_downloaded + details "(batch X)";
-    # failure -> details "Failed: ..." (C8 prefix convention, db.py:366).
-    patch = fetched.select(
-        "replay_id",
-        F.col("ok").alias("is_downloaded"),
-        F.current_timestamp().alias("downloaded_at"),
-        F.lit(batch).alias("downloaded_batch"),
-        F.when(F.col("ok"), F.lit(f"Downloaded (batch {batch})"))
-        .otherwise(F.concat(F.lit(C.FAILED_PREFIX), F.col("error")))
-        .alias("download_details"),
-    )
-    meta.patch(patch, format_id)
+    meta.patch(fetched.select("replay_id", *patch_of(batch)), format_id)
 
     counts = fetched.agg(
         F.count("*").alias("total"), F.sum(F.col("ok").cast("int")).alias("ok")
@@ -267,9 +279,36 @@ def download(
     return {
         "batch_id": batch,
         "total": counts["total"],
-        "downloaded": n_ok,
+        ok_key: n_ok,
         "failed": counts["total"] - n_ok,
     }
+
+
+def download(
+    spark: SparkSession,
+    lake: ReplayLake,
+    client: ReplayApiClient,
+    format_id: str,
+    parallelism: int = 8,
+) -> dict:
+    """Download stage (tasks/download.py:105-266): fetch every
+    undownloaded replay (F2, partition-pruned), land documents in the
+    partitioned replay lake, MERGE per-replay success/failure into
+    metadata."""
+    # db.py:736-830: success -> is_downloaded + details "(batch X)";
+    # failure -> details "Failed: ..." (C8 prefix convention, db.py:366).
+    return _fetch_and_land(
+        spark, lake, client, format_id, parallelism,
+        work_of=M.undownloaded, prefix="", ok_key="downloaded",
+        patch_of=lambda batch: [
+            F.col("ok").alias("is_downloaded"),
+            F.current_timestamp().alias("downloaded_at"),
+            F.lit(batch).alias("downloaded_batch"),
+            F.when(F.col("ok"), F.lit(f"Downloaded (batch {batch})"))
+            .otherwise(F.concat(F.lit(C.FAILED_PREFIX), F.col("error")))
+            .alias("download_details"),
+        ],
+    )
 
 
 # --- stage 3: retry (T4 dead-letter re-drive) -------------------------------
@@ -285,45 +324,23 @@ def retry_failed(
     """Retry stage (tasks/retry.py:23-158): re-fetch failed-and-never-
     retried downloads (F4 three-valued-logic predicate, db.py:562-569);
     every attempted row gets is_retry_attempted=True exactly once."""
-    meta = MetadataStore(spark, lake.metadata_path)
-    work = M.failed_unretried(meta.read(), format_id)
-    if work.isEmpty():
-        return {"total": 0, "recovered": 0, "failed": 0, "skipped": True}
-    batch = _batch_id(format_id, prefix="retry_")
-
-    fetched = _distributed_fetch(work, client, parallelism)
-    docs = _docs_from_fetch(fetched)
-    # same small-file hygiene as download's landing write (guide §6)
-    docs.hint("rebalance", "format", "date").write.partitionBy(
-        "format", "date"
-    ).mode("append").parquet(lake.replays_path)
-
-    patch = fetched.select(
-        "replay_id",
-        F.lit(True).alias("is_retry_attempted"),
-        F.current_timestamp().alias("retry_at"),
-        F.lit(batch).alias("retry_batch"),
-        F.when(F.col("ok"), F.lit(f"Recovered (batch {batch})"))
-        .otherwise(F.concat(F.lit(C.FAILED_PREFIX), F.col("error")))
-        .alias("retry_details"),
-        # recovered rows also flip the download flag (retry.py:106-130)
-        F.when(F.col("ok"), F.lit(True)).alias("is_downloaded"),
-        F.when(F.col("ok"), F.lit(f"Downloaded on retry (batch {batch})")).alias(
-            "download_details"
-        ),
+    return _fetch_and_land(
+        spark, lake, client, format_id, parallelism,
+        work_of=M.failed_unretried, prefix="retry_", ok_key="recovered",
+        patch_of=lambda batch: [
+            F.lit(True).alias("is_retry_attempted"),
+            F.current_timestamp().alias("retry_at"),
+            F.lit(batch).alias("retry_batch"),
+            F.when(F.col("ok"), F.lit(f"Recovered (batch {batch})"))
+            .otherwise(F.concat(F.lit(C.FAILED_PREFIX), F.col("error")))
+            .alias("retry_details"),
+            # recovered rows also flip the download flag (retry.py:106-130)
+            F.when(F.col("ok"), F.lit(True)).alias("is_downloaded"),
+            F.when(
+                F.col("ok"), F.lit(f"Downloaded on retry (batch {batch})")
+            ).alias("download_details"),
+        ],
     )
-    meta.patch(patch, format_id)
-
-    counts = fetched.agg(
-        F.count("*").alias("total"), F.sum(F.col("ok").cast("int")).alias("ok")
-    ).first()
-    n_ok = counts["ok"] or 0
-    return {
-        "batch_id": batch,
-        "total": counts["total"],
-        "recovered": n_ok,
-        "failed": counts["total"] - n_ok,
-    }
 
 
 # --- stage 4: compaction (K2 day-partition rewrite) -------------------------
@@ -452,7 +469,12 @@ def run_daily_pipeline(
     max_pages: int = 5,
 ) -> dict:
     """O1: the linear DAG, one call per task, compaction always runs
-    (ALL_DONE trigger rule — showdown_replay_etl_dag.py:76)."""
+    (ALL_DONE trigger rule — showdown_replay_etl_dag.py:76).
+
+    Every page after the first re-reads at least one known row (the
+    tie-safe cursor of _walk_pages), so ``max_pages`` pages cover
+    51 + 50 * (max_pages - 1) new replays a day: about 251 at the
+    default 5, not 255."""
     stats = {"discover": discover(spark, lake, client, format_id, max_pages)}
     try:
         stats["download"] = download(spark, lake, client, format_id)

@@ -593,9 +593,10 @@ def sampled_quantile_audit(
 # every stored word bit-exactly.
 #
 # Words merge by bitwise OR: idempotent, commutative, associative — a
-# per-batch facet merged at compaction heals crash-window double reads
-# by idempotence (like the HLL max law, unlike the additive LM/CMS
-# facets). Membership: a key is MAYBE present iff all BLOOM_K probed
+# per-batch facet the signature lake folds at compaction like every
+# other registered facet (its reads skip crash-window batches the same
+# way, though OR, like the HLL max law, would heal a double read).
+# Membership: a key is MAYBE present iff all BLOOM_K probed
 # bits are set; absent keys read false except at the documented
 # false-positive rate (~ fill^k); present keys NEVER read false — the
 # no-false-negative law the decontamination serve relies on.

@@ -13,6 +13,7 @@ of a ReplayApiClient.
 
 from __future__ import annotations
 
+import bisect
 import json
 import re
 from dataclasses import dataclass, field
@@ -56,17 +57,24 @@ def make_replays(format_id: str, n: int, t0: int = 1_700_000_000, step: int = 36
 
 @dataclass
 class FakeShowdownTransport:
-    """Transport callable serving a seeded replay corpus."""
+    """Transport callable serving a seeded replay corpus.
+
+    The heal counter lives in the object, and every Spark task gets its
+    own pickled copy: with ``heal_after >= max_retries`` a flaky replay
+    never heals across stages (download's attempts do not count toward
+    retry's)."""
 
     replays_by_format: dict[str, list[dict]]
     flaky_every: int = 0  # every k-th replay 500s until attempts exhaust heal_after
     heal_after: int = 2
     dead_every: int = 0  # every k-th replay permanently 404s
     _attempts: dict[str, int] = field(default_factory=dict)
-    # memoized descending-uploadtime view per format (a real API serves
-    # pages from an index; re-sorting per page request would dominate
-    # large-corpus benchmarks). Invalidated when the list object or its
-    # length changes.
+    # memoized per-format views (a real API serves pages and point
+    # lookups from an index; re-sorting per page or scanning per fetch
+    # would dominate large-corpus benchmarks): (key, rows by descending
+    # uploadtime, their negated uploadtimes for bisect, id -> (doc,
+    # position in the source list)). Invalidated when the list object
+    # or its length changes.
     _sorted_cache: dict[str, tuple] = field(default_factory=dict)
 
     def __call__(self, url: str, connect_timeout: float, read_timeout: float) -> tuple[int, str]:
@@ -75,27 +83,26 @@ class FakeShowdownTransport:
         m = re.search(r"/([^/]+)\.json$", url)
         return self._replay(m.group(1)) if m else (404, "not found")
 
-    def _sorted(self, fmt: str) -> list[dict]:
+    def _view(self, fmt: str) -> tuple:
         source = self.replays_by_format.get(fmt, [])
         key = (id(source), len(source))
         cached = self._sorted_cache.get(fmt)
         if cached is None or cached[0] != key:
             rows = sorted(source, key=lambda r: r["uploadtime"], reverse=True)
-            self._sorted_cache[fmt] = (key, rows)
-            return rows
-        return cached[1]
+            index: dict[str, tuple[dict, int]] = {}
+            for i, r in enumerate(source):
+                index.setdefault(r["id"], (r, i))
+            cached = (key, rows, [-r["uploadtime"] for r in rows], index)
+            self._sorted_cache[fmt] = cached
+        return cached
 
     def _search(self, url: str) -> tuple[int, str]:
         fmt = re.search(r"format=([^&]+)", url).group(1)
         before = re.search(r"before=(\d+)", url)
-        rows = self._sorted(fmt)
+        _, rows, keys, _ = self._view(fmt)
         if before:
-            cutoff = int(before.group(1))
             # rows are sorted descending: binary-search the cutoff
-            import bisect
-
-            keys = [-r["uploadtime"] for r in rows]
-            rows = rows[bisect.bisect_right(keys, -cutoff) :]
+            rows = rows[bisect.bisect_right(keys, -int(before.group(1))) :]
         page = [
             {k: r[k] for k in ("id", "uploadtime", "p1", "p2", "format", "rating")}
             for r in rows[:PAGE_SIZE]
@@ -103,10 +110,10 @@ class FakeShowdownTransport:
         return 200, json.dumps(page)
 
     def _index_of(self, rid: str) -> tuple[dict | None, int]:
-        for rows in self.replays_by_format.values():
-            for i, r in enumerate(rows):
-                if r["id"] == rid:
-                    return r, i
+        for fmt in self.replays_by_format:
+            hit = self._view(fmt)[3].get(rid)
+            if hit is not None:
+                return hit
         return None, -1
 
     def _replay(self, rid: str) -> tuple[int, str]:

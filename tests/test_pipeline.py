@@ -79,6 +79,41 @@ def test_backfill_walks_to_oldest(spark, lake):
     assert load_state(lake, FMT)["oldest_ts"] is not None
 
 
+def _tied_client(corpus, lo, hi):
+    # corpus[lo:hi] (ascending uploadtime) all take corpus[lo]'s second
+    for r in corpus[lo:hi]:
+        r["uploadtime"] = corpus[lo]["uploadtime"]
+    return ReplayApiClient(
+        transport=FakeShowdownTransport({FMT: corpus}), sleeper=lambda s: None
+    )
+
+
+def test_discover_keeps_replays_tied_across_a_page_boundary(spark, lake):
+    """Five replays share one upload time at descending positions 49-53,
+    straddling the first page's end. The API's ``before`` is strict, so
+    a cursor at the last row's time would skip the three past the page
+    end; every replay must be discovered, each once."""
+    corpus = make_replays(FMT, 120)
+    client = _tied_client(corpus, 66, 71)
+    stats = discover(spark, lake, client, FMT, max_pages=10)
+    assert stats["new_replays"] == 120 and stats["replays_found"] == 120
+    meta = MetadataStore(spark, lake.metadata_path).read()
+    assert {r["replay_id"] for r in meta.select("replay_id").collect()} == {
+        r["id"] for r in corpus
+    }
+
+
+def test_discover_ends_on_a_full_page_of_one_second_ties(spark, lake):
+    """The newest 51 replays share one second: re-asking from just
+    above it returns the same page with nothing new, so the walk falls
+    back to the strict cursor, reaches the older rows and ends."""
+    corpus = make_replays(FMT, 60)
+    client = _tied_client(corpus, 9, 60)
+    stats = discover(spark, lake, client, FMT, max_pages=100)
+    assert stats["pages_fetched"] == 3
+    assert stats["new_replays"] == 60 and stats["replays_found"] == 60
+
+
 def test_download_lands_docs_and_flags(spark, lake):
     # every 13th replay 404s permanently -> dead-lettered with Failed: prefix
     transport = FakeShowdownTransport({FMT: make_replays(FMT, N)}, dead_every=13)

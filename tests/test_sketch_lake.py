@@ -282,65 +282,78 @@ def test_cms_facet_merged_equals_from_scratch_with_sound_estimates(
     assert st["gram_est"]["shared words"] == est
 
 
+def _lang_docs(spark, lo, hi, salt=""):
+    # with the segment column, so ingest writes the hllg facet too
+    return _docs(spark, lo, hi, salt).withColumn(
+        "lang", F.when(F.col("doc_id") % 3 == 0, "en").otherwise("de")
+    )
+
+
+def _facet_reads(spark, root):
+    """Every registered facet's served rows by table — estats is the
+    embedding lake's facet and has no partition here."""
+    from pokemon_showdown_airflow_etl_spark.jobs import doc_signature_lake as L
+
+    readers = {
+        L.SKETCH_TABLE: L.read_corpus_sketch,
+        L.LM_TABLE: L.read_corpus_lm,
+        L.CMS_TABLE: L.read_corpus_cms,
+        L.HH_TABLE: L.read_corpus_hh,
+        L.BLOOM_TABLE: L.read_corpus_bloom,
+        L.HLLG_TABLE: L.read_corpus_grouped_hll,
+        L.HIST_TABLE: L.read_corpus_hist,
+    }
+    assert set(readers) == set(L.FACETS) - {L.ESTATS_TABLE}
+    return {t: _rows(read(spark, root)) for t, read in readers.items()}
+
+
 def test_compaction_reduces_additive_facets_without_changing_the_merge(
     spark, tmp_path
 ):
-    import os
-
-    from pokemon_showdown_airflow_etl_spark.jobs.doc_signature_lake import (
-        CMS_TABLE,
-        LM_TABLE,
-        read_corpus_cms,
-        read_corpus_lm,
-    )
-
+    """Every facet the lake holds ends as exactly one consolidated
+    partition whose served rows equal the pre-compaction merge."""
     root = str(tmp_path / "sig")
-    ingest_signature_batch(spark, _docs(spark, 0, 40), root, "day1")
-    ingest_signature_batch(spark, _docs(spark, 40, 75, salt="x"), root, "day2")
-    clean_lm = _rows(read_corpus_lm(spark, root))
-    clean_cms = _rows(read_corpus_cms(spark, root))
+    ingest_signature_batch(spark, _lang_docs(spark, 0, 40), root, "day1")
+    ingest_signature_batch(
+        spark, _lang_docs(spark, 40, 75, salt="x"), root, "day2"
+    )
+    clean = _facet_reads(spark, root)
     st = compact_signature_corpus(spark, root, min_batches=2)
     assert st["n_batches_consolidated"] == 2
-    for table in (LM_TABLE, CMS_TABLE):
+    for table in clean:
         parts = [
             d for d in os.listdir(os.path.join(root, table))
             if d.startswith("batch=")
         ]
         assert len(parts) == 1 and parts[0].startswith("batch=compact-")
-    assert _rows(read_corpus_lm(spark, root)) == clean_lm
-    assert _rows(read_corpus_cms(spark, root)) == clean_cms
+    assert _facet_reads(spark, root) == clean
 
 
 def test_additive_facets_exclude_crash_window_batches(spark, tmp_path):
     """The compaction crash window (consolidated batch committed, old
     partitions not yet removed) would DOUBLE additive counts — unlike
     the max/bottom-k sketch, summing can't heal by idempotence, so the
-    readers must exclude manifest-replaced batches explicitly."""
-    import os
+    readers must exclude manifest-replaced batches explicitly. Every
+    facet reads the same partitions and serves its clean rows."""
     import shutil
 
-    from pokemon_showdown_airflow_etl_spark.jobs.doc_signature_lake import (
-        read_corpus_cms,
-        read_corpus_lm,
-    )
-
     root = str(tmp_path / "sig")
-    ingest_signature_batch(spark, _docs(spark, 0, 40), root, "day1")
-    ingest_signature_batch(spark, _docs(spark, 40, 75, salt="x"), root, "day2")
-    clean_lm = _rows(read_corpus_lm(spark, root))
-    clean_cms = _rows(read_corpus_cms(spark, root))
+    ingest_signature_batch(spark, _lang_docs(spark, 0, 40), root, "day1")
+    ingest_signature_batch(
+        spark, _lang_docs(spark, 40, 75, salt="x"), root, "day2"
+    )
+    clean = _facet_reads(spark, root)
     snap = str(tmp_path / "snap")
     shutil.copytree(root, snap)
     compact_signature_corpus(spark, root, min_batches=2)
     # restore the replaced batches' partitions as the crash left them
     for b in ("day1", "day2"):
-        for table in ("members", "lm", "cms"):
+        for table in ("members", *clean):
             shutil.copytree(
                 os.path.join(snap, table, f"batch={b}"),
                 os.path.join(root, table, f"batch={b}"),
             )
-    assert _rows(read_corpus_lm(spark, root)) == clean_lm
-    assert _rows(read_corpus_cms(spark, root)) == clean_cms
+    assert _facet_reads(spark, root) == clean
 
 
 def test_hh_facet_serves_heavy_hitters_from_stored_rows(spark, tmp_path):
